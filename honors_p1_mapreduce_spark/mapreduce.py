@@ -29,6 +29,13 @@ JVM Catalyst instead; use this only for semantics the DataFrame API
 can't express. Each reducer key's values materialize in one pandas
 group — the same per-key memory model as the reference's
 ``defaultdict(list)`` (worker.py:145), bounded by the hottest key.
+
+Reading pyspark's task metrics for these jobs: the plan nodes' "time to
+initialize Python workers" is not start-up cost. A reused worker starts
+the clock for its next task (``boot_time`` in ``pyspark/worker.py``) as
+soon as the previous task ends, so the figure also holds the worker's
+idle time between tasks. The fixed per-task start-up cost is what
+``pydaemon`` removes.
 """
 
 from __future__ import annotations
@@ -104,12 +111,15 @@ def run_job(
     """The reference client's submit surface as one call
     (mr/client/client.py:52-72): text file in, per-job TSV dir out
     (honoring output_path as declared — SURVEY.md §1.3), sorted keys
-    within each of ``num_reduces`` output partitions. Returns the
-    result frame (also usable without writing).
+    within each of ``num_reduces`` output partitions. Each key-hashed
+    reduce partition ``map_reduce`` produced becomes one part file, with
+    no second shuffle, as each reference reducer writes its own file
+    (mr/worker/worker.py:162-171). Returns the result frame (also usable
+    without writing).
     """
     from .sources.text import read_text_lines, write_tsv
 
     lines = read_text_lines(spark, input_path, min_partitions=num_maps)
     result = map_reduce(lines, mapper, reducer, num_partitions=num_reduces)
-    write_tsv(result, output_path, num_partitions=num_reduces)
+    write_tsv(result, output_path)
     return result

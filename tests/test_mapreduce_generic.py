@@ -187,3 +187,13 @@ def test_run_job_tsv_round_trip(spark, tmp_path):
     }
     # results --limit N analog (mr/client/client.py:137-140)
     assert read_tsv_results(spark, out_dir, limit=2).count() == 2
+    # one part file per reduce partition (mr/worker/worker.py:162-171):
+    # sorted keys within each, every key in exactly one
+    parts = sorted((tmp_path / "out").glob("part-*"))
+    assert 1 <= len(parts) <= 2
+    seen: list[str] = []
+    for part in parts:
+        keys = [line.split("\t")[0] for line in part.read_text().splitlines()]
+        assert keys == sorted(keys)
+        seen += keys
+    assert sorted(seen) == ["hello", "spark", "world"]
